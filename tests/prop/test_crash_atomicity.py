@@ -6,9 +6,16 @@ manifest, (3) atomically swap HEAD. A kill at ANY point before (3)
 must leave readers on the previous snapshot with nothing torn, and a
 subsequent writer (the resumed crawl) must complete as if the crash
 never happened. Each test simulates the kill by raising from the exact
-protocol step, then re-drives the writer."""
+protocol step, then re-drives the writer.
+
+The streaming loop adds its inbox publish in front of the catalog
+commit; its two crash windows (staged but not renamed; renamed but not
+committed) are injected the same way."""
 
 from __future__ import annotations
+
+import glob
+import os
 
 import pytest
 
@@ -20,6 +27,7 @@ from who_focus_crawler_spark.plans.crawl import (
     run_crawl,
 )
 from who_focus_crawler_spark.sources.fixture_web import WebConfig
+from who_focus_crawler_spark.streaming import crawl as SC
 
 CRASH_WEB = WebConfig(n_hosts=6, n_pages=40, seed_hosts=(0, 1), max_batches=6)
 
@@ -142,21 +150,100 @@ def test_crawl_resumes_identically_after_torn_batch_commit(spark, tmp_path):
 
     resumed = run_crawl(spark, cfg, resume=True)
 
-    def order(c):
-        return [
-            (r.seq, r.batch, r.canon_url)
-            for r in c.read_table(spark, "crawl_order", schemas.CRAWL_ORDER)
-            .orderBy("seq")
-            .collect()
-        ]
+    assert _order(spark, resumed) == _order(spark, full)
+    assert _seen(spark, resumed) == _seen(spark, full)
 
-    def seen(c):
-        return {
-            r.canon_url
-            for r in c.read_table(
-                spark, "url_seen", schemas.URL_SEEN
-            ).collect()
-        }
 
-    assert order(resumed) == order(full)
-    assert seen(resumed) == seen(full)
+def _order(spark, c):
+    return [
+        (r.seq, r.batch, r.canon_url)
+        for r in c.read_table(spark, "crawl_order", schemas.CRAWL_ORDER)
+        .orderBy("seq")
+        .collect()
+    ]
+
+
+def _seen(spark, c):
+    return {
+        r.canon_url
+        for r in c.read_table(spark, "url_seen", schemas.URL_SEEN).collect()
+    }
+
+
+def _stream(spark, root):
+    return SC.run_crawl_streaming(
+        spark,
+        CrawlConfig(
+            web=CRASH_WEB, checkpoint_dir=str(root / "unused"), num_buckets=8
+        ),
+        inbox=str(root / "inbox"),
+        checkpoint=str(root / "ck"),
+        catalog_root=str(root / "cat"),
+    )
+
+
+def _published(root):
+    return sorted(p for p in glob.glob(str(root / "inbox" / "*")) if os.path.isdir(p))
+
+
+@pytest.fixture(scope="module")
+def stream_full(spark, tmp_path_factory):
+    cat = _stream(spark, tmp_path_factory.mktemp("stream_full"))
+    return _order(spark, cat), _seen(spark, cat)
+
+
+@pytest.mark.parametrize("window", ["staged", "renamed"])
+def test_streaming_resumes_identically_after_crash_in_epoch_2(
+    spark, tmp_path, monkeypatch, stream_full, window
+):
+    """Epoch 2 dies after staging its inbox directory but before the
+    rename ("staged"), or after the rename but before the catalog commit
+    ("renamed"). Re-driving the stream with the same inbox, checkpoint
+    and catalog re-delivers epoch 2 and lands on the uninterrupted run's
+    crawl_order and url_seen, with every URL in the inbox exactly once."""
+    cat = SnapshotCatalog(str(tmp_path / "cat"))
+
+    def in_epoch_2():
+        return (cat.state() or {}).get("crawl_epochs") == 1
+
+    if window == "staged":
+        orig = SC.commit_staged_dir
+
+        def commit_staged_dir(staged, inbox, name):
+            if staged is not None and name != "seed" and in_epoch_2():
+                raise _Boom()
+            orig(staged, inbox, name)
+
+        monkeypatch.setattr(SC, "commit_staged_dir", commit_staged_dir)
+    else:
+        orig = SnapshotCatalog.commit
+
+        def commit(self, *args, **kwargs):
+            if kwargs["state"].get("crawl_epochs") == 2:
+                raise _Boom()
+            orig(self, *args, **kwargs)
+
+        monkeypatch.setattr(SnapshotCatalog, "commit", commit)
+    with pytest.raises(Exception):
+        _stream(spark, tmp_path)
+    monkeypatch.undo()
+
+    assert cat.state()["crawl_epochs"] == 1  # epoch 2 not committed
+    # seed + epoch 1, plus epoch 2 only once it was renamed into place
+    assert len(_published(tmp_path)) == (2 if window == "staged" else 3)
+    if window == "staged":
+        assert os.listdir(tmp_path / "inbox" / ".staging")
+
+    resumed = _stream(spark, tmp_path)
+    full_order, full_seen = stream_full
+    assert _order(spark, resumed) == full_order
+    assert _seen(spark, resumed) == full_seen
+    inbox_urls = [
+        r.canon_url
+        for r in spark.read.schema(SC.INBOX_SCHEMA)
+        .parquet(*_published(tmp_path))
+        .select("canon_url")
+        .collect()
+    ]
+    assert len(inbox_urls) == len(set(inbox_urls))
+    assert set(inbox_urls) == full_seen

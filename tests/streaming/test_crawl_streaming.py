@@ -227,3 +227,95 @@ def test_streaming_crawl_order_equality_saturated(spark, tmp_path):
     bo, so = order(bcat), order(scat)
     assert len(bo) > 0
     assert so == bo  # EXACT global schedule equality, every column
+
+
+def _order(spark, cat):
+    return [
+        (r.seq, r.batch, r.canon_url, r.url_hash, r.host, r.depth, r.seed_id)
+        for r in cat.read_table(spark, "crawl_order", schemas.CRAWL_ORDER)
+        .orderBy("seq")
+        .collect()
+    ]
+
+
+def _both_loops(spark, tmp_path, web, **cfg_kw):
+    bcat = run_crawl(
+        spark,
+        CrawlConfig(
+            web=web, checkpoint_dir=str(tmp_path / "bcat"), num_buckets=8,
+            **cfg_kw,
+        ),
+    )
+    assert bcat.state()["finished"]
+    scat = run_crawl_streaming(
+        spark,
+        CrawlConfig(
+            web=web, checkpoint_dir=str(tmp_path / "unused"), num_buckets=8,
+            **cfg_kw,
+        ),
+        inbox=str(tmp_path / "inbox"),
+        checkpoint=str(tmp_path / "ck"),
+        catalog_root=str(tmp_path / "scat"),
+    )
+    return bcat, scat
+
+
+def test_streaming_applies_trap_threshold(spark, tmp_path):
+    """Both loops run one crawl wave, so CrawlConfig.trap_threshold gates
+    streaming discovery too: at 0 every discovered link is a trap and
+    each loop fetches exactly the seeds."""
+    web = WebConfig(select_k=10_000, politeness_k=10_000)
+    bcat, scat = _both_loops(spark, tmp_path, web, trap_threshold=0)
+    bo = _order(spark, bcat)
+    assert [r[5] for r in bo] == [0] * len(web.seed_hosts)  # seeds only
+    assert _order(spark, scat) == bo
+
+
+def test_streaming_applies_content_dedup(spark, tmp_path):
+    """web.content_dedup on a saturated mirrored web: the streaming loop
+    owns content_seen and lands on the batch loop's crawl_order,
+    documents and url_seen."""
+    web = WebConfig(
+        n_hosts=4,
+        n_pages=60,
+        seed_hosts=(0, 1),
+        select_k=10_000,
+        politeness_k=10_000,
+        mirror_every=3,
+        content_dedup=True,
+    )
+    bcat, scat = _both_loops(spark, tmp_path, web)
+    bo = _order(spark, bcat)
+    assert _order(spark, scat) == bo
+    bdocs = _doc_map(spark, bcat)
+    assert len(bdocs) < len(bo)  # non-vacuous: duplicates not indexed
+    assert _doc_map(spark, scat) == bdocs
+    assert _url_seen(spark, scat) == _url_seen(spark, bcat)
+
+
+@pytest.mark.parametrize(
+    "opt",
+    [
+        {"opic_priority": True},
+        {"aging_boost_milli": 1500},
+        {"use_sitemaps": True},
+    ],
+    ids=lambda o: next(iter(o)),
+)
+def test_streaming_refuses_batch_only_options(spark, tmp_path, opt):
+    """Selection and sitemap seeding exist only in the batch loop; the
+    streaming loop refuses them instead of silently ignoring them."""
+    cfg = CrawlConfig(
+        web=WebConfig(n_hosts=2, n_pages=4, seed_hosts=(0,)),
+        checkpoint_dir=str(tmp_path / "unused"),
+        num_buckets=8,
+        **opt,
+    )
+    with pytest.raises(ValueError, match=next(iter(opt))):
+        run_crawl_streaming(
+            spark,
+            cfg,
+            inbox=str(tmp_path / "inbox"),
+            checkpoint=str(tmp_path / "ck"),
+            catalog_root=str(tmp_path / "scat"),
+        )

@@ -668,35 +668,36 @@ def test_corpus_merge_guards_and_cross_run_dedup(spark, tmp_path):
     assert v3.groupBy(F.md5("text")).count().filter(F.col("count") > 1).count() == 0
 
 
-def test_decode_media_arrow_matches_pandas_path(spark):
-    """The mapInArrow decoder and the mapInPandas decoder produce
-    identical frame rows (and the Arrow path refuses real decode the
-    same way)."""
+def test_decode_media_matches_fake_decode(spark):
+    """decode_media's Arrow dispatch emits exactly the frames of the
+    pure _fake_decode per payload (and refuses real decode of payloads
+    no codec recognizes)."""
     import pytest
 
     from who_focus_crawler_spark.corpus.multimodal import (
+        _fake_decode,
         attach_media,
-        decode_media_arrow,
-        decode_media_pandas,
+        decode_media,
     )
 
     docs = spark.read.parquet(
         "/root/testdata/sf0.001/documents.parquet"
     ).select("doc_id", "text").limit(60)
     media = attach_media(docs)
-    a = sorted(
+    got = sorted(
         (r.media_id, r.frame_idx, tuple(r.feature))
-        for r in decode_media_arrow(media, fake=True).collect()
+        for r in decode_media(media, fake=True).collect()
     )
-    p = sorted(
-        (r.media_id, r.frame_idx, tuple(r.feature))
-        for r in decode_media_pandas(media, fake=True).collect()
+    want = sorted(
+        (r.media_id, i, tuple(feat))
+        for r in media.select("media_id", "payload").collect()
+        for i, feat in enumerate(_fake_decode(bytes(r.payload), 3))
     )
-    assert a == p and len(a) == 180  # 60 items x 3 frames
+    assert got == want and len(got) == 180  # 60 items x 3 frames
     # payloads that match no real codec's magic refuse real decode at
     # execution time
     with pytest.raises(Exception, match="external codecs"):
-        decode_media_arrow(media).collect()
+        decode_media(media).collect()
 
 
 def test_minhash_incremental_equals_full_minus_old_pairs(docs):

@@ -35,12 +35,6 @@ Implementations:
   tradeoff vs flock: a crash between create and unlink leaks the
   sentinel until the TTL breaks it (flock auto-releases on process
   death); the janitor bounds that window.
-- `RestCatalogCAS` (skeleton): documents the exact adapter a networked
-  deployment implements — Iceberg REST `POST /v1/{prefix}/namespaces/
-  {ns}/tables/{table}` commits carry the base metadata location and the
-  server enforces the conditional update; the adapter maps "requirement
-  failed" to ``False`` so the engine's retry loop revalidates and
-  reassembles, exactly like Spark's Iceberg writer.
 """
 
 from __future__ import annotations
@@ -52,7 +46,15 @@ from pathlib import Path
 
 
 class CompareAndSwap:
-    """Backend contract: one atomic conditional publish."""
+    """Backend contract: one atomic conditional publish.
+
+    A networked catalog (Iceberg REST) implements it without a local
+    lock: ``attempt``'s local side effects (staged data renamed, the
+    manifest written) happen first, as in the shim; the head swing is
+    the server's conditional commit, `POST /v1/{prefix}/namespaces/{ns}/
+    tables/{table}` with an ``assert-ref-snapshot-id == expected_head``
+    requirement; HTTP 409 maps to ``False``, so the engine's retry loop
+    revalidates and reassembles, like Spark's Iceberg writer."""
 
     def try_publish(
         self, expected_head: int | None, attempt: Callable[[], None]
@@ -206,32 +208,3 @@ def make_cas(backend: str, root: Path, head_fn: Callable[[], int | None]) -> Com
             f"unknown CAS backend {backend!r} (have {sorted(BACKENDS)})"
         )
     return BACKENDS[backend](root, head_fn)
-
-
-class RestCatalogCAS(CompareAndSwap):
-    """Adapter SKELETON for a real Iceberg REST catalog (or any backend
-    with a server-side conditional update). Not runnable in this
-    sandbox — no network — but the mapping is mechanical:
-
-    - ``attempt`` side effects that are LOCAL (renaming staged data to
-      final paths, writing the manifest file) happen first, exactly as
-      in the shim;
-    - the head swing becomes the server call: send the new metadata
-      with an ``assert-ref-snapshot-id == expected_head`` requirement
-      (REST spec `TableRequirement`); HTTP 409 ⇒ return False;
-    - the server is the source of truth for ``expected_head`` — no
-      local lock file exists or is needed.
-    """
-
-    def __init__(self, endpoint: str, table: str):
-        self.endpoint = endpoint
-        self.table = table
-
-    def try_publish(
-        self, expected_head: int | None, attempt: Callable[[], None]
-    ) -> bool:
-        raise NotImplementedError(
-            "network-backed catalog CAS: implement the REST conditional "
-            "commit here (requirement assert-ref-snapshot-id == "
-            f"{expected_head}); this sandbox has no network"
-        )

@@ -16,12 +16,12 @@ bounded-error) statistics over deterministic real-codec fixtures.
 Formats that genuinely need external codecs (video, compressed audio)
 raise NotImplementedError;
 `fake=True` keeps the deterministic stand-in that exercises the same
-plumbing (schema, Arrow batch shape, mapInPandas partitioning) for
+plumbing (schema, Arrow batch shape, mapInArrow partitioning) for
 those kinds.
 
 At 100 TB the pattern is: binary payloads stay in their own column so
 Parquet column pruning skips them unless a stage actually decodes; decode
-runs in `mapInPandas` with an iterator signature so one Python worker
+runs in `mapInArrow` with an iterator signature so one Python worker
 amortizes codec setup across Arrow batches; frame-sampling emits
 one row per sampled frame via the iterator (no driver involvement).
 """
@@ -30,7 +30,6 @@ from __future__ import annotations
 
 from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -96,11 +95,9 @@ def _fake_decode(payload: bytes, n_frames: int) -> list[list[float]]:
 def decode_media(media: DataFrame, frames_per_item: int = 3, fake: bool = False) -> DataFrame:
     """Decode/feature-extract/frame-sample → one row per sampled frame.
 
-    PRIMARY path = mapInArrow (decode_media_arrow): a future real-codec
-    drop-in lands on the RecordBatch path, where binary payloads cross
-    as Arrow buffers instead of being materialized twice as Python
-    objects by the pandas conversion. ``decode_media_pandas`` is kept as
-    the mapInPandas twin purely so the row-equality test pins both forms.
+    The batch crosses as pyarrow RecordBatches (mapInArrow) with NO
+    pandas conversion: for binary media payloads that conversion would
+    materialize every blob as a Python object twice per batch.
 
     With fake=False, PNG payloads decode FOR REAL (stdlib zlib,
     corpus/png.py) and 'frames' are horizontal bands with exact pixel
@@ -111,40 +108,6 @@ def decode_media(media: DataFrame, frames_per_item: int = 3, fake: bool = False)
     codecs and raise NotImplementedError. fake=True runs
     the deterministic stand-in through the identical Spark plumbing for
     any payload kind."""
-    return decode_media_arrow(media, frames_per_item=frames_per_item, fake=fake)
-
-
-def decode_media_pandas(
-    media: DataFrame, frames_per_item: int = 3, fake: bool = False
-) -> DataFrame:
-    """mapInPandas twin of decode_media — see decode_media's docstring."""
-    if not fake:
-        raise NotImplementedError(
-            "media codecs are not available in this environment; "
-            "pass fake=True for the deterministic test decoder"
-        )
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, payload in zip(pdf["media_id"], pdf["payload"]):
-                for idx, feat in enumerate(_fake_decode(bytes(payload), frames_per_item)):
-                    rows.append((mid, idx, feat))
-            yield pd.DataFrame(rows, columns=["media_id", "frame_idx", "feature"])
-
-    return media.select("media_id", "payload").mapInPandas(decode, FRAME_SCHEMA)
-
-
-def decode_media_arrow(
-    media: DataFrame, frames_per_item: int = 3, fake: bool = False
-) -> DataFrame:
-    """The RecordBatch decode path (primary — decode_media delegates
-    here): identical rows to decode_media_pandas, but the batch crosses
-    as pyarrow RecordBatches with NO pandas conversion — for binary
-    media payloads that conversion materializes every blob as a Python
-    object twice per batch, so at media scale the Arrow form is the
-    right vectorized path (tests pin row equality with the pandas
-    form)."""
     import pyarrow as pa
 
     def _real_decode(payload: bytes, n_frames: int) -> list[list[float]]:

@@ -1,6 +1,6 @@
 """C10+C11 — fetch + extract as one fused vectorized row-transform.
 
-``mapInPandas`` iterator form: one Python worker amortizes setup across
+``mapInArrow`` iterator form: one Python worker amortizes setup across
 Arrow batches; the page body is synthesized deterministically from the
 canonical URL by the same pure function the golden crawler uses
 (sources/fixture_web.synth_spans), so span-sequence equality vs the frozen
@@ -12,9 +12,6 @@ media_ref, offset) output contract.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
@@ -40,35 +37,13 @@ _PASSTHROUGH = ["seq", "batch", "canon_url", "url_hash", "host", "depth", "seed_
 def fetch_and_extract(admitted: DataFrame, cfg: WebConfig) -> DataFrame:
     """admitted (sequenced) rows → fetched documents with span sequences.
 
-    PRIMARY path = mapInArrow (fetch_and_extract_arrow): span sequences
-    are list<struct> and the pandas crossing materializes every span as
-    a Python dict inside an object column TWICE (build + Arrow
-    re-conversion); building the Arrow ListArray/StructArray directly
-    from flat columns skips that entirely (~2× on the fetch stage at
-    200k pages, measured round 5). fetch_and_extract_pandas is kept as
-    the twin so a row-equality test pins both forms."""
-    return fetch_and_extract_arrow(admitted, cfg)
-
-
-def fetch_and_extract_pandas(admitted: DataFrame, cfg: WebConfig) -> DataFrame:
-    """mapInPandas twin of fetch_and_extract — see its docstring."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = pdf[_PASSTHROUGH].copy()
-            out["spans"] = [synth_spans(u, cfg) for u in pdf["canon_url"]]
-            yield out
-
-    # project to the minimal column set BEFORE the UDF: the pandas input
-    # schema is the column-pruning boundary (SURVEY.md §4)
-    return admitted.select(*_PASSTHROUGH).mapInPandas(run, FETCHED_SCHEMA)
-
-
-def fetch_and_extract_arrow(admitted: DataFrame, cfg: WebConfig) -> DataFrame:
-    """The RecordBatch fetch path (primary): identical rows to the
-    pandas form, but spans are assembled as ONE Arrow ListArray over a
-    StructArray of flat (kind, text, media_ref, offset) columns — no
-    per-span Python dicts cross the boundary."""
+    Span sequences are list<struct>: a pandas crossing would build every
+    span as a Python dict inside an object column and convert it back to
+    Arrow. Here they are assembled as ONE Arrow ListArray over a
+    StructArray of flat (kind, text, media_ref, offset) columns, so no
+    per-span Python dict crosses the boundary (~2× on the fetch stage at
+    200k pages). tests/unit/test_fetch_arrow.py pins
+    every row against synth_spans."""
     import pyarrow as pa
 
     def run(batches):

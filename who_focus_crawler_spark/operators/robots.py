@@ -112,14 +112,21 @@ def fetch_robots_for_hosts(
 
 
 def refresh_robots_cache(
-    candidates: DataFrame, robots_cache: DataFrame, cfg: WebConfig, batch: int
+    candidates: DataFrame,
+    robots_cache: DataFrame | None,
+    cfg: WebConfig,
+    batch: int,
 ) -> DataFrame:
     """TTL'd cache refresh: a cached rule set older than
     ``cfg.robots_ttl_batches`` batches is treated as absent, so hosts
     this batch touches get re-fetched (rule changes take effect) and
     expired rows for untouched hosts are evicted. ``None`` TTL = cache
     forever (the fixture web's rules are immutable, so goldens are
-    unaffected)."""
+    unaffected). ``robots_cache`` None = nothing cached yet: every
+    candidate host is fetched, with no anti-join or union against an
+    empty table (whose plan runs the fetch over more partitions)."""
+    if robots_cache is None:
+        return fetch_robots_for_hosts(candidates, cfg, batch)
     ttl = getattr(cfg, "robots_ttl_batches", None)
     fresh = (
         robots_cache

@@ -1,12 +1,30 @@
-"""The crawl engine's main loop (SURVEY.md §3.1).
+"""The crawl engine's batch loop (SURVEY.md §3.1) and the crawl wave
+both loops share.
 
-One driver-side iteration = one fetch batch = one committed snapshot:
+A crawl WAVE (`crawl_wave`) is the engine's one statement of crawl
+semantics, from a driver's candidate rows to the lazy deltas of one
+snapshot:
 
-  frontier scan → C6 select (window over host) → C8 robots (broadcast join
-  + pandas UDF) → C7 politeness (window) → C9 sequencing (deterministic
-  total order) → C10+C11 fetch+extract (mapInPandas) → C12 discovery
-  (posexplode + canonicalize) → C4 dedup (bloom fast path + exact
-  anti-join) → C5 merge → C16 metrics → C14 snapshot commit.
+  C8 robots gate (optimistic against the TTL-fresh cache; a miss pays
+  the robots fetch and a second gate pass) → C7 politeness (window) →
+  C9 sequencing (deterministic total order) → C10+C11 fetch+extract
+  (mapInArrow) → Mercator content-seen test (opt-in) → C12 discovery
+  (posexplode + canonicalize) → trap gate (opt-in) → C4 dedup (in-batch
+  winner, then exact dedup against url_seen).
+
+The two drivers keep only what differs between them. The batch loop
+(`run_batch`: one driver-side iteration = one fetch batch = one
+committed snapshot) adds C6 selection in front of the wave (OPIC and
+aging views, `select_candidates`) and C5 merge, the seen-filter update,
+C16 metrics and the C14 commit behind it. The streaming loop
+(streaming/crawl.py) feeds the wave arrivals ∪ its backlog and
+publishes the wave's new links to its inbox.
+
+Seen-dedup path, chosen from what the driver can already observe: a
+loop that keeps seen filters (the batch loop with ``use_bloom``) probes
+them in front of the exact anti-join; otherwise a wave whose PROVEN
+admitted count is at most `SCANONLY_MAX_FETCHED` takes the scan-only
+form (no shuffle of url_seen); larger waves take the shuffle anti-join.
 
 Determinism contract: given the same seed list, politeness budget, and
 fixture web, `crawl_order`, `url_seen`, and every span sequence are
@@ -16,23 +34,26 @@ parallelism level — verified by tests/e2e + tests/prop.
 
 from __future__ import annotations
 
-import os
-import time
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Row, SparkSession, Window
 from pyspark.sql import functions as F
 
 from who_focus_crawler_spark import schemas
 from who_focus_crawler_spark.checkpoint.snapshot import SnapshotCatalog
+from who_focus_crawler_spark.functions.traps import trap_score
 from who_focus_crawler_spark.operators.dedup import (
     build_seen_filters,
     dedup_against_seen,
+    dedup_against_seen_scanonly,
     dedup_in_batch,
     part_id,
     update_seen_filters,
 )
-from who_focus_crawler_spark.operators.discover import discover_links
+from who_focus_crawler_spark.operators.discover import (
+    discover_links,
+    has_meta_directive,
+)
 from who_focus_crawler_spark.operators.fetch import fetch_and_extract
 from who_focus_crawler_spark.operators.frontier import (
     age_boosted_view,
@@ -43,6 +64,12 @@ from who_focus_crawler_spark.operators.frontier import (
 from who_focus_crawler_spark.operators.politeness import apply_politeness, assign_seq
 from who_focus_crawler_spark.operators.robots import apply_robots, refresh_robots_cache
 from who_focus_crawler_spark.sources.fixture_web import WebConfig, seed_urls
+
+# above this PROVEN admitted count a wave's discovery set may be too
+# large to broadcast (≈1.5 link targets per fetched page at the fixture
+# fanout; ~100 bytes per key row ⇒ ~300k fetched ≈ 50 MB broadcast) —
+# the shuffle anti-join takes over from the scan-only form
+SCANONLY_MAX_FETCHED = 300_000
 
 
 @dataclass
@@ -117,8 +144,6 @@ def _add_sitemap_seeds(frontier: DataFrame, cfg: CrawlConfig) -> DataFrame:
         fetch_sitemaps_for_hosts(frontier.select("host"), cfg.web)
     )
     if cfg.trap_threshold is not None:
-        from who_focus_crawler_spark.functions.traps import trap_score
-
         # discovery channel 2 obeys the same frontier-hygiene gate as
         # link discovery — trap-shaped sitemap entries never enqueue
         parsed = parsed.filter(
@@ -163,17 +188,24 @@ def _add_sitemap_seeds(frontier: DataFrame, cfg: CrawlConfig) -> DataFrame:
     return frontier.unionByName(cand)
 
 
+def seen_rows(df: DataFrame, url_col: str, num_buckets: int) -> DataFrame:
+    """url_seen rows of ``df``'s (url_hash, url_col) pairs."""
+    return df.select(
+        "url_hash",
+        F.col(url_col).alias("canon_url"),
+        part_id(F.col("url_hash"), num_buckets).alias("part_id"),
+    )
+
+
 def bootstrap(spark: SparkSession, cfg: CrawlConfig) -> SnapshotCatalog:
-    """Snapshot 0: seeds enter the frontier and the URL-seen set."""
+    """Snapshot 0: seeds enter the frontier and the URL-seen set.
+    robots_cache is registered with no file-set, so the first wave sees
+    an absent cache without a Spark job and skips the optimistic gate."""
     catalog = SnapshotCatalog(cfg.checkpoint_dir)
     frontier = bootstrap_frontier(spark, seed_urls(cfg.web), cfg.num_buckets)
     if cfg.use_sitemaps:
         frontier = _add_sitemap_seeds(frontier, cfg)
-    url_seen = frontier.select(
-        "url_hash",
-        "canon_url",
-        part_id(F.col("url_hash"), cfg.num_buckets).alias("part_id"),
-    )
+    url_seen = seen_rows(frontier, "canon_url", cfg.num_buckets)
     filters = build_seen_filters(url_seen, cfg.num_buckets, kind=cfg.filter_kind)
     catalog.commit(
         0,
@@ -181,7 +213,7 @@ def bootstrap(spark: SparkSession, cfg: CrawlConfig) -> SnapshotCatalog:
             "frontier": frontier,
             "url_seen": url_seen,
             "seen_filters": filters,
-            "robots_cache": _empty(spark, schemas.ROBOTS_CACHE),
+            "robots_cache": None,
             "host_state": _empty(spark, schemas.HOST_STATE),
             "crawl_order": _empty(spark, schemas.CRAWL_ORDER),
             "documents": _empty(spark, schemas.DOCUMENTS_OUT),
@@ -196,8 +228,6 @@ def bootstrap(spark: SparkSession, cfg: CrawlConfig) -> SnapshotCatalog:
     )
     return catalog
 
-
-_TIMING = os.environ.get("WFC_DEBUG_TIMING", "") == "1"
 
 _OPIC_SCALE = 10**9
 
@@ -259,17 +289,255 @@ def _opic_boosted_view(
     )
 
 
+def _content_dedup(
+    fetched: DataFrame, content_seen: DataFrame
+) -> tuple[DataFrame, DataFrame]:
+    """Mercator content-seen test (cfg.web.content_dedup): a body whose
+    (kind, text, media_ref) span sequence was already fetched at a lower
+    seq — this wave (row_number over seq per hash) or any earlier one
+    (the persisted content_seen table) — keeps its crawl_order slot but
+    is neither indexed nor link-expanded. Redirect bodies are exempt:
+    their hash is salted with the URL so two redirects at the same
+    target never "duplicate" each other. Golden twin: sources/golden.py
+    (content_key over the same fields).
+
+    Returns (the fetched rows that are first of their content, the
+    content_seen delta)."""
+    identity = F.to_json(
+        F.transform(
+            F.col("spans"),
+            lambda s: F.struct(
+                s["kind"].alias("kind"),
+                s["text"].alias("text"),
+                s["media_ref"].alias("media_ref"),
+            ),
+        )
+    )
+    is_red = F.exists(F.col("spans"), lambda s: s["kind"] == F.lit("redirect"))
+    chash = F.when(
+        is_red, F.xxhash64(F.concat(F.lit("redirect|"), F.col("canon_url")))
+    ).otherwise(F.xxhash64(identity))
+    w_ch = Window.partitionBy("_chash").orderBy("seq")
+    flagged = (
+        fetched.withColumn("_chash", chash)
+        .withColumn("_isred", is_red)
+        .withColumn("_rn", F.row_number().over(w_ch))
+        .join(
+            content_seen.select(F.col("content_hash").alias("_chash"))
+            .distinct()
+            .withColumn("_prev", F.lit(True)),
+            "_chash",
+            "left",
+        )
+    )
+    first_here = (F.col("_rn") == 1) & F.col("_prev").isNull()
+    delta = flagged.filter(first_here & ~F.col("_isred")).select(
+        F.col("_chash").alias("content_hash"), "canon_url", "batch"
+    )
+    return flagged.filter(first_here).drop("_chash", "_isred", "_rn", "_prev"), delta
+
+
+@dataclass
+class Wave:
+    """What one crawl wave leaves its driver. Counts are exact; every
+    DataFrame is lazy. A table delta is None when the wave leaves that
+    table unchanged."""
+
+    cand: DataFrame  # the driver's rows + robots_ok, admitted
+    n_selected: int
+    n_admitted: int
+    n_deferred: int  # robots-allowed rows politeness held back
+    new_unique: DataFrame  # links new to url_seen (dedup_in_batch rows)
+    events: DataFrame  # raw discovery events, before the trap gate
+    robots_cache: DataFrame | None  # replace-table
+    crawl_order: DataFrame | None = None  # append deltas from here on
+    documents: DataFrame | None = None
+    url_seen: DataFrame | None = None
+    content_seen: DataFrame | None = None
+    host_state: DataFrame | None = None  # replace-table
+    cached: list[DataFrame] = field(default_factory=list)
+
+    def enqueued(self) -> DataFrame:
+        """new_unique as frontier rows (priority = -depth)."""
+        return self.new_unique.select(
+            F.col("target_url").alias("canon_url"),
+            "url_hash",
+            "host",
+            "host_bucket",
+            (-F.col("depth").cast("double")).alias("priority"),
+            "depth",
+            "seed_id",
+            "parent_hash",
+        )
+
+    def release(self) -> None:
+        # dependents first: unpersisting a frame re-plans every cached
+        # frame built on it, which would lose the trap gate's barrier
+        for df in reversed(self.cached):
+            df.unpersist()
+
+
+def crawl_wave(
+    cfg: CrawlConfig,
+    rows: DataFrame,
+    url_seen: DataFrame,
+    robots_cache: DataFrame | None,
+    host_state: DataFrame | None,
+    clock: int,
+    base_seq: int,
+    seen_filters: DataFrame | None = None,
+    content_seen: DataFrame | None = None,
+) -> Wave:
+    """One crawl wave over a driver's candidate ``rows`` (frontier
+    columns): C8 → C7 → C9 → C10/C11 → content-seen → C12 → trap gate →
+    C4 (module docstring). ``clock`` is the batch (or epoch) number: the
+    robots TTL clock and the ``batch`` column of the deltas; seq
+    continues from ``base_seq``. ``robots_cache`` None means nothing is
+    cached yet; ``seen_filters`` is given only by a loop that keeps them.
+
+    Spark actions: one count per gate pass, plus the robots refresh
+    when the cache misses a host or is absent. Everything after C7 is
+    lazy."""
+    spark = rows.sparkSession
+    web, P = cfg.web, cfg.num_buckets
+    cached: list[DataFrame] = []
+
+    def keep(df: DataFrame) -> DataFrame:
+        cached.append(df.persist())
+        return df
+
+    def gate(r: DataFrame, cache: DataFrame, miss_col: str | None = None) -> DataFrame:
+        return apply_politeness(
+            apply_robots(r, cache, miss_col=miss_col),
+            web.politeness_k,
+            batch_window_s=web.batch_window_s,
+        )
+
+    def counts(c: DataFrame, *extra) -> Row:
+        return c.agg(
+            F.count("*").alias("n"),
+            F.count_if(F.col("admitted")).alias("a"),
+            F.count_if(F.col("robots_ok") & ~F.col("admitted")).alias("d"),
+            *extra,
+        ).collect()[0]
+
+    # C8 fast path: gate OPTIMISTICALLY against the TTL-fresh cache with
+    # no fetch subplan in the job, counting cache-MISS rows inside the
+    # same politeness aggregation. For cached hosts this gate IS the
+    # final answer (identical rules), so a wave whose hosts are all
+    # cached skips the robots fetch, the cache union and the cache
+    # rewrite. A miss refreshes the cache and gates every row again:
+    # re-gating only the missed hosts' rows and unioning them with the
+    # rest ran 39 Spark jobs a batch instead of 30, and slower. With no
+    # cache at all every host misses, so the optimistic pass is skipped.
+    ttl = web.robots_ttl_batches
+    robots_cache2 = None
+    miss = robots_cache is None
+    if not miss:
+        fresh = (
+            robots_cache
+            if ttl is None
+            else robots_cache.filter(F.col("fetched_in_batch") >= clock - ttl)
+        )
+        cand = keep(gate(rows, fresh, miss_col="cache_miss"))
+        c = counts(cand, F.count_if(F.col("cache_miss")).alias("m"))
+        miss = c["m"] > 0
+        if not miss:
+            # the table changes only when TTL eviction can have changed it
+            robots_cache2 = None if ttl is None else fresh
+    if miss:
+        # materialized before the gate broadcasts it: left lazy, the
+        # refresh ran inside the gate's broadcast and a batch took ~10%
+        # longer (fixture web, local[4])
+        robots_cache2 = refresh_robots_cache(
+            rows, robots_cache, web, clock
+        ).localCheckpoint(eager=True)
+        cand = keep(gate(rows, robots_cache2))
+        c = counts(cand)
+    n_admitted = c["a"]
+
+    # C9 + C10/C11 — the proven count lets small waves skip the two-phase
+    # rank's fixed overhead (same total order either way)
+    admitted = assign_seq(
+        cand.filter(F.col("admitted")).withColumn("batch", F.lit(clock)),
+        base_seq - 1,
+        n_rows=n_admitted,
+    )
+    fetched = keep(fetch_and_extract(admitted, web))
+    indexed, content_delta = fetched, None
+    if web.content_dedup:
+        if content_seen is None:
+            content_seen = _empty(spark, schemas.CONTENT_SEEN)
+        indexed, content_delta = _content_dedup(fetched, content_seen)
+        indexed = keep(indexed)
+
+    # C12 + trap gate + C4. The trap gate is a scan-level map on the
+    # discovery stream, ahead of the dedup shuffle, so trap URLs never
+    # cost exchange bandwidth; C16's `discovered` counts the raw stream,
+    # so gated links land in `deduped` rather than vanishing.
+    events = links = discover_links(indexed, P)
+    if cfg.trap_threshold is not None:
+        # cached first: trap_score reads target_url a dozen times, and
+        # without the cache as a barrier the optimizer substitutes the
+        # canonicalization expression into every read (a plan that
+        # takes minutes to optimize)
+        events = keep(events)
+        links = events.filter(
+            trap_score(F.col("target_url")) < F.lit(cfg.trap_threshold)
+        )
+    winners = dedup_in_batch(links)
+    if seen_filters is not None:
+        new_unique = dedup_against_seen(winners, url_seen, seen_filters, P)
+    elif n_admitted <= SCANONLY_MAX_FETCHED:
+        # winners cached: the scan-only form traverses it twice (its
+        # keys are broadcast, then it is the probe side)
+        new_unique = dedup_against_seen_scanonly(keep(winners), url_seen)
+    else:
+        new_unique = dedup_against_seen(winners, url_seen, None, P)
+
+    wave = Wave(
+        cand=cand,
+        n_selected=c["n"],
+        n_admitted=n_admitted,
+        n_deferred=c["d"],
+        new_unique=keep(new_unique),
+        events=events,
+        robots_cache=robots_cache2,
+        cached=cached,
+    )
+    if n_admitted == 0:
+        return wave
+    if host_state is None:
+        host_state = _empty(spark, schemas.HOST_STATE)
+    fetched_counts = admitted.groupBy("host").agg(F.count("*").alias("n"))
+    wave.host_state = host_state.join(fetched_counts, "host", "full").select(
+        "host",
+        (F.coalesce(F.col("fetched_total"), F.lit(0)) + F.coalesce(F.col("n"), F.lit(0)))
+        .cast("long")
+        .alias("fetched_total"),
+        F.when(F.col("n").isNotNull(), F.lit(clock))
+        .otherwise(F.col("last_batch"))
+        .cast("int")
+        .alias("last_batch"),
+    )
+    wave.crawl_order = fetched.select(
+        "seq", "batch", "canon_url", "url_hash", "host", "depth", "seed_id"
+    )
+    # robots-meta noindex: the page was fetched (it holds its seq in
+    # crawl_order) but its content stays out of the documents corpus
+    wave.documents = indexed.filter(
+        ~has_meta_directive(F.col("spans"), "noindex")
+    ).select(F.col("canon_url").alias("doc_id"), "spans", "batch")
+    wave.url_seen = seen_rows(new_unique, "target_url", P)
+    wave.content_seen = content_delta
+    return wave
+
+
 def run_batch(
     spark: SparkSession, cfg: CrawlConfig, catalog: SnapshotCatalog
 ) -> dict:
-    """Execute one fetch batch and commit it. Returns the batch stats."""
-    _t0 = time.time()
-    _marks: list[tuple[str, float]] = []
-
-    def _mark(label: str) -> None:
-        if _TIMING:
-            _marks.append((label, time.time()))
-
+    """Execute one fetch batch and commit it: C6 select, one crawl wave,
+    C5 merge, seen-filter update, C16 metrics. Returns the batch stats."""
     st = catalog.state()
     assert st is not None and not st["finished"]
     batch, base_seq = st["next_batch"], st["next_seq"]
@@ -281,21 +549,14 @@ def run_batch(
     sid = catalog.next_snapshot_id()
     P = cfg.num_buckets
 
-    frontier = catalog.read_table(spark, "frontier", schemas.FRONTIER)
-    url_seen = catalog.read_table(spark, "url_seen", schemas.URL_SEEN)
-    robots_cache = catalog.read_table(spark, "robots_cache", schemas.ROBOTS_CACHE)
-    host_state = catalog.read_table(spark, "host_state", schemas.HOST_STATE)
-    seen_filters = (
-        catalog.read_table(spark, "seen_filters", schemas.SEEN_FILTERS)
-        if cfg.use_bloom
-        else None
-    )
-    if robots_cache is None:
-        robots_cache = _empty(spark, schemas.ROBOTS_CACHE)
-    if host_state is None:
-        host_state = _empty(spark, schemas.HOST_STATE)
+    def read(name: str, schema) -> DataFrame | None:
+        return catalog.read_table(spark, name, schema)
 
-    # C6 + C8 + C7 — select once (small: ≤ hosts × k rows), then decide
+    frontier = read("frontier", schemas.FRONTIER)
+    url_seen = read("url_seen", schemas.URL_SEEN)
+    seen_filters = read("seen_filters", schemas.SEEN_FILTERS) if cfg.use_bloom else None
+
+    # C6 — select once (small: ≤ hosts × k rows), then one wave decides
     frontier_sel = (
         _opic_boosted_view(frontier, url_seen, cfg.opic_iters)
         if cfg.opic_priority
@@ -308,161 +569,57 @@ def run_batch(
     sel = select_candidates(
         frontier_sel, cfg.web.select_k, salt=cfg.salt
     ).localCheckpoint(eager=True)
-    robots_cache = refresh_robots_cache(
-        sel, robots_cache, cfg.web, batch
-    ).localCheckpoint(eager=True)  # cache: broadcast twice below
-    _mark("select+robots")
-    cand = apply_politeness(
-        apply_robots(sel, robots_cache),
-        cfg.web.politeness_k,
-        batch_window_s=cfg.web.batch_window_s,
-    ).persist()
-    # one action for both counters; fetch is 1:1 with admitted rows
-    _c = cand.agg(
-        F.count("*").alias("n"),
-        F.sum(F.when(F.col("admitted"), 1).otherwise(0)).alias("a"),
-    ).collect()[0]
-    n_selected, n_fetched = int(_c["n"]), int(_c["a"] or 0)
-    _mark("politeness+count")
-    if n_selected == 0:
+    w = crawl_wave(
+        cfg,
+        sel,
+        url_seen,
+        read("robots_cache", schemas.ROBOTS_CACHE),
+        read("host_state", schemas.HOST_STATE),
+        batch,
+        base_seq,
+        seen_filters=seen_filters,
+        content_seen=(
+            read("content_seen", schemas.CONTENT_SEEN)
+            if cfg.web.content_dedup
+            else None
+        ),
+    )
+    if w.n_selected == 0:  # frontier drained: every table carries forward
         catalog.commit(
             sid,
-            {t: None for t in ("crawl_order", "documents", "metrics", "url_seen")}
-            | ({"content_seen": None} if cfg.web.content_dedup else {})
-            | {
-                "frontier": frontier,
-                "seen_filters": seen_filters,
-                "robots_cache": robots_cache,
-                "host_state": host_state,
-            },
+            {},
             state={"next_seq": base_seq, "next_batch": batch + 1, "finished": True},
         )
-        cand.unpersist()
+        w.release()
         return {"batch": batch, "fetched": 0, "new_urls": 0, "finished": True}
 
-    # C9 + C10/C11
-    admitted = assign_seq(
-        cand.filter(F.col("admitted")).withColumn("batch", F.lit(batch)),
-        base_seq - 1,
-        n_rows=n_fetched,  # proven count ⇒ small batches skip the
-        # two-phase rank's fixed overhead (same total order either way)
-    )
-    fetched = fetch_and_extract(admitted, cfg.web).persist()
-
-    # Mercator content-seen test (opt-in, cfg.web.content_dedup): a body
-    # whose (kind, text, media_ref) span sequence was already fetched at
-    # a lower seq — this batch (row_number over seq per hash) or any
-    # earlier one (the persisted content_seen table) — keeps its
-    # crawl_order slot but is neither indexed nor link-expanded.
-    # Redirect bodies are exempt: their hash is salted with the URL so
-    # two redirects at the same target never "duplicate" each other.
-    # Golden twin: sources/golden.py (content_key over the same fields).
-    content_delta = None
-    fetched_eff = fetched
-    if cfg.web.content_dedup:
-        content_seen = catalog.read_table(
-            spark, "content_seen", schemas.CONTENT_SEEN
-        )
-        if content_seen is None:
-            content_seen = _empty(spark, schemas.CONTENT_SEEN)
-        identity = F.to_json(
-            F.transform(
-                F.col("spans"),
-                lambda s: F.struct(
-                    s["kind"].alias("kind"),
-                    s["text"].alias("text"),
-                    s["media_ref"].alias("media_ref"),
-                ),
-            )
-        )
-        is_red = F.exists(F.col("spans"), lambda s: s["kind"] == F.lit("redirect"))
-        chash = F.when(
-            is_red, F.xxhash64(F.concat(F.lit("redirect|"), F.col("canon_url")))
-        ).otherwise(F.xxhash64(identity))
-        w_ch = Window.partitionBy("_chash").orderBy("seq")
-        flagged = (
-            fetched.withColumn("_chash", chash)
-            .withColumn("_isred", is_red)
-            .withColumn("_rn", F.row_number().over(w_ch))
-            .join(
-                content_seen.select(
-                    F.col("content_hash").alias("_chash")
-                ).distinct().withColumn("_prev", F.lit(True)),
-                "_chash",
-                "left",
-            )
-        )
-        first_here = (F.col("_rn") == 1) & F.col("_prev").isNull()
-        content_delta = flagged.filter(first_here & ~F.col("_isred")).select(
-            F.col("_chash").alias("content_hash"), "canon_url", "batch"
-        )
-        fetched_eff = (
-            flagged.filter(first_here)
-            .drop("_chash", "_isred", "_rn", "_prev")
-            .persist()
-        )
-
-    # C12 + C4
-    events = discover_links(fetched_eff, P)
-    # C16's `discovered` counts the raw discovery stream; with trap
-    # gating on, gated links therefore land in `deduped` (= discovered
-    # − new_urls), i.e. "discovered but not admitted to the frontier" —
-    # they are never silently invisible to the metrics.
-    events_discovered = events
-    if cfg.trap_threshold is not None:
-        from who_focus_crawler_spark.functions.traps import trap_score
-
-        # scan-level map on the discovery stream — composes before the
-        # dedup shuffle so trap URLs never cost exchange bandwidth
-        events = events.filter(
-            trap_score(F.col("target_url")) < F.lit(cfg.trap_threshold)
-        )
-    winners = dedup_in_batch(events)
-    new_unique = dedup_against_seen(winners, url_seen, seen_filters, P).persist()
-
-    n_new = new_unique.count()
-    _mark("fetch+discover+dedup")
+    n_new = w.new_unique.count()
 
     # C5 — merge
-    new_frontier_rows = new_unique.select(
-        F.col("target_url").alias("canon_url"),
-        "url_hash",
-        "host",
-        "host_bucket",
-        (-F.col("depth").cast("double")).alias("priority"),
-        "depth",
-        "seed_id",
-        "parent_hash",
+    consumed = w.cand.filter(F.col("admitted") | ~F.col("robots_ok"))
+    new_frontier_rows = w.enqueued().select(
+        "*",
         F.lit(batch).alias("discovered_in_batch"),
         F.lit("enqueued").alias("state"),
     )
-    consumed = cand.filter(F.col("admitted") | ~F.col("robots_ok"))
     frontier2 = merge_frontier(frontier, consumed, new_frontier_rows)
-
-    url_seen_delta = new_unique.select(
-        "url_hash",
-        F.col("target_url").alias("canon_url"),
-        part_id(F.col("url_hash"), P).alias("part_id"),
-    )
     filters2 = (
-        update_seen_filters(seen_filters, url_seen_delta, P, kind=cfg.filter_kind)
-        if seen_filters is not None
+        update_seen_filters(seen_filters, w.url_seen, P, kind=cfg.filter_kind)
+        if seen_filters is not None and w.url_seen is not None
         else None
     )
 
     # C16 — metrics (per batch × host; deduped = discovered − new_urls)
-    sched = cand.groupBy("host").agg(
+    sched = w.cand.groupBy("host").agg(
         F.count("*").alias("scheduled"),
-        F.sum(F.when(~F.col("robots_ok"), 1).otherwise(0)).alias("blocked_robots"),
-        F.sum(F.when(F.col("admitted"), 1).otherwise(0)).alias("admitted"),
-        F.sum(
-            F.when(F.col("robots_ok") & ~F.col("admitted"), 1).otherwise(0)
-        ).alias("deferred"),
+        F.count_if(~F.col("robots_ok")).alias("blocked_robots"),
+        F.count_if(F.col("admitted")).alias("admitted"),
+        F.count_if(F.col("robots_ok") & ~F.col("admitted")).alias("deferred"),
     )
-    disc = events_discovered.groupBy(F.col("parent_host").alias("host")).agg(
+    disc = w.events.groupBy(F.col("parent_host").alias("host")).agg(
         F.count("*").alias("discovered")
     )
-    new_m = new_unique.groupBy(F.col("parent_host").alias("host")).agg(
+    new_m = w.new_unique.groupBy(F.col("parent_host").alias("host")).agg(
         F.count("*").alias("new_urls")
     )
     metrics = (
@@ -483,69 +640,30 @@ def run_batch(
         )
     )
 
-    fetched_counts = admitted.groupBy("host").agg(F.count("*").alias("n"))
-    host_state2 = (
-        host_state.join(fetched_counts, "host", "full")
-        .select(
-            "host",
-            (F.coalesce(F.col("fetched_total"), F.lit(0)) + F.coalesce(F.col("n"), F.lit(0)))
-            .cast("long")
-            .alias("fetched_total"),
-            F.when(F.col("n").isNotNull(), F.lit(batch))
-            .otherwise(F.col("last_batch"))
-            .cast("int")
-            .alias("last_batch"),
-        )
-    )
-
-    crawl_order_delta = fetched.select(
-        "seq", "batch", "canon_url", "url_hash", "host", "depth", "seed_id"
-    )
-    # robots-meta noindex: the page was fetched (it holds its seq in
-    # crawl_order) but its content stays out of the documents corpus
-    from who_focus_crawler_spark.operators.discover import has_meta_directive
-
-    documents_delta = fetched_eff.filter(
-        ~has_meta_directive(F.col("spans"), "noindex")
-    ).select(F.col("canon_url").alias("doc_id"), "spans", "batch")
-
-    _mark("plan_rest")
     catalog.commit(
         sid,
         {
             "frontier": frontier2,
-            "url_seen": url_seen_delta,  # append table: delta only
+            "url_seen": w.url_seen,  # append tables: deltas only
             "seen_filters": filters2,
-            "robots_cache": robots_cache,
-            "host_state": host_state2,
-            "crawl_order": crawl_order_delta,  # append
-            "documents": documents_delta,  # append
-            "metrics": metrics,  # append
+            "robots_cache": w.robots_cache,
+            "host_state": w.host_state,
+            "crawl_order": w.crawl_order,
+            "documents": w.documents,
+            "metrics": metrics,
         }
-        | ({"content_seen": content_delta} if cfg.web.content_dedup else {}),
+        | ({"content_seen": w.content_seen} if cfg.web.content_dedup else {}),
         state={
-            "next_seq": base_seq + n_fetched,
+            "next_seq": base_seq + w.n_admitted,
             "next_batch": batch + 1,
             "finished": False,
         },
     )
-    _mark("commit")
-    if _TIMING:
-        prev = _t0
-        parts = []
-        for label, ts in _marks:
-            parts.append(f"{label}={ts - prev:.1f}s")
-            prev = ts
-        print(f"[wfc-timing] batch={batch} total={time.time() - _t0:.1f}s " + " ".join(parts), flush=True)
-    cand.unpersist()
-    fetched.unpersist()
-    if fetched_eff is not fetched:
-        fetched_eff.unpersist()
-    new_unique.unpersist()
+    w.release()
     return {
         "batch": batch,
-        "selected": n_selected,
-        "fetched": n_fetched,
+        "selected": w.n_selected,
+        "fetched": w.n_admitted,
         "new_urls": n_new,
         "finished": False,
     }
