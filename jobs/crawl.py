@@ -28,13 +28,8 @@ def main() -> None:
     ap.add_argument("--batches", type=int, default=None)
     ap.add_argument("--buckets", type=int, default=32)
     ap.add_argument("--resume", action="store_true")
-    ap.add_argument("--no-bloom", action="store_true")
     ap.add_argument("--hosts", type=int, default=40)
     ap.add_argument("--pages", type=int, default=2000)
-    ap.add_argument(
-        "--filter-kind", choices=["bloom", "cuckoo"], default="bloom",
-        help="URL-seen fast-path membership structure",
-    )
     ap.add_argument(
         "--trap-threshold", type=int, default=None,
         help="drop discovered/sitemap URLs at or above this trap score",
@@ -64,11 +59,6 @@ def main() -> None:
              "(duplicate-content hazard for --content-dedup)",
     )
     args = ap.parse_args()
-    if args.no_bloom and args.filter_kind != "bloom":
-        ap.error(
-            "--no-bloom disables the membership fast path entirely, so "
-            "--filter-kind cuckoo would never be consulted; drop one flag"
-        )
 
     web = {
         "unit": UNIT_WEB,
@@ -89,8 +79,6 @@ def main() -> None:
         web=web,
         checkpoint_dir=args.checkpoint_dir,
         num_buckets=args.buckets,
-        use_bloom=not args.no_bloom,
-        filter_kind=args.filter_kind,
         max_batches=args.batches,
         trap_threshold=args.trap_threshold,
         use_sitemaps=args.sitemaps,

@@ -3,15 +3,10 @@ these run in milliseconds and shake edge cases the fixed vectors miss)."""
 
 from __future__ import annotations
 
-import numpy as np
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from who_focus_crawler_spark.functions.urls import canonicalize_py
-from who_focus_crawler_spark.operators.dedup import (
-    bloom_build,
-    bloom_maybe_contains,
-)
 
 url_chars = st.text(
     alphabet="abcXY019-._~%/?&=#:." , min_size=0, max_size=40
@@ -73,20 +68,6 @@ def test_resolve_py_matches_urljoin(base_segs, query, href):
     ours = canonicalize_py(resolve_py(base, href))
     theirs = canonicalize_py(urljoin(base, href))
     assert ours == theirs, (base, href, ours, theirs)
-
-
-@given(
-    seed=st.integers(min_value=0, max_value=2**32 - 1),
-    n=st.integers(min_value=1, max_value=2000),
-    nhashes=st.integers(min_value=1, max_value=9),
-)
-@settings(max_examples=60, deadline=None)
-def test_bloom_never_false_negative(seed, n, nhashes):
-    rng = np.random.default_rng(seed)
-    keys = rng.integers(0, 2**63, size=n, dtype=np.int64).astype(np.uint64)
-    nbits = 1 << 14
-    blob = bloom_build(keys, nbits=nbits, nhashes=nhashes)
-    assert bloom_maybe_contains(blob, keys, nbits, nhashes).all()
 
 
 # ---------------------------------------------------------------- sampling

@@ -4,24 +4,21 @@
     committed snapshot, final state equals the uninterrupted run;
 (b) partitioning-invariance — crawl_order independent of the bucket
     count / shuffle layout (the C9 determinism claim);
-(c) dedup correctness — bloom fast path returns exactly the exact
-    anti-join result (no false negatives by construction);
+(c) dedup correctness — both seen-dedup forms (shuffle anti-join and
+    scan-only) return exactly the expected new set;
 (d) dedup idempotence — re-deduping already-merged discoveries yields
     nothing new.
 """
 
 from __future__ import annotations
 
-import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from who_focus_crawler_spark import schemas
 from who_focus_crawler_spark.operators.dedup import (
-    bloom_build,
-    bloom_maybe_contains,
-    build_seen_filters,
     dedup_against_seen,
+    dedup_against_seen_scanonly,
     part_id,
 )
 from who_focus_crawler_spark.plans.crawl import CrawlConfig, run_crawl
@@ -75,17 +72,6 @@ def test_partitioning_invariance(spark, tmp_path):
     assert _seen(spark, a) == _seen(spark, b)
 
 
-def test_bloom_no_false_negatives():
-    rng = np.random.default_rng(42)
-    keys = rng.integers(0, 2**63, size=5000, dtype=np.int64).astype(np.uint64)
-    blob = bloom_build(keys, nbits=1 << 17, nhashes=7)
-    assert bloom_maybe_contains(blob, keys, 1 << 17, 7).all()
-    # false-positive rate stays low on fresh keys
-    fresh = rng.integers(0, 2**63, size=5000, dtype=np.int64).astype(np.uint64)
-    fp = bloom_maybe_contains(blob, fresh, 1 << 17, 7).mean()
-    assert fp < 0.05
-
-
 @pytest.fixture()
 def seen_and_candidates(spark):
     P = 8
@@ -103,26 +89,30 @@ def seen_and_candidates(spark):
     return spark, seen, cand, P
 
 
-def test_bloom_dedup_equals_exact(seen_and_candidates):
+SEEN_DEDUP_FORMS = pytest.mark.parametrize(
+    "dedup",
+    [dedup_against_seen, dedup_against_seen_scanonly],
+    ids=["shuffle", "scanonly"],
+)
+
+
+@SEEN_DEDUP_FORMS
+def test_seen_dedup_equals_exact(seen_and_candidates, dedup):
     spark, seen, cand, P = seen_and_candidates
-    filters = build_seen_filters(seen, P)
-    with_bloom = {
-        r.target_url for r in dedup_against_seen(cand, seen, filters, P).collect()
-    }
-    exact = {r.target_url for r in dedup_against_seen(cand, seen, None, P).collect()}
-    assert with_bloom == exact
-    # sanity: the expected set — multiples of 3 that are not even (≥600 all new)
+    got = {r.target_url for r in dedup(cand, seen).collect()}
+    # the expected set — multiples of 3 that are not even (≥600 all new)
     want = {
         f"http://h{i % 5}.t/p/{i}"
         for i in range(0, 900, 3)
         if i % 2 == 1 or i >= 600
     }
-    assert exact == want
+    assert got == want
 
 
-def test_dedup_idempotent(seen_and_candidates):
+@SEEN_DEDUP_FORMS
+def test_dedup_idempotent(seen_and_candidates, dedup):
     spark, seen, cand, P = seen_and_candidates
-    new = dedup_against_seen(cand, seen, None, P)
+    new = dedup(cand, seen)
     # merge the discoveries into url_seen, then dedup the same batch again
     merged = seen.unionByName(
         new.select(
@@ -131,29 +121,8 @@ def test_dedup_idempotent(seen_and_candidates):
             part_id(F.col("url_hash"), P).alias("part_id"),
         )
     )
-    again = dedup_against_seen(cand, merged, None, P)
+    again = dedup(cand, merged)
     assert again.count() == 0
-
-
-def test_cuckoo_crawl_matches_bloom(spark, tmp_path):
-    """The filter kind is a performance choice, never a semantic one."""
-    a = run_crawl(
-        spark,
-        CrawlConfig(
-            web=PROP_WEB, checkpoint_dir=str(tmp_path / "bloomk"), num_buckets=8
-        ),
-    )
-    b = run_crawl(
-        spark,
-        CrawlConfig(
-            web=PROP_WEB,
-            checkpoint_dir=str(tmp_path / "cuckook"),
-            num_buckets=8,
-            filter_kind="cuckoo",
-        ),
-    )
-    assert _order(spark, a) == _order(spark, b)
-    assert _seen(spark, a) == _seen(spark, b)
 
 
 def test_rollback_then_resume_equivalence(spark, tmp_path):

@@ -16,10 +16,10 @@ A crash before the HEAD swap leaves the previous snapshot intact;
 guarantees the continuation equals an uninterrupted run.
 
 Tables are either REPLACE (manifest points only at this snapshot's files:
-frontier, robots_cache, host_state, seen_filters) or APPEND (manifest
-carries the previous file list plus this snapshot's delta: crawl_order,
-documents, metrics, url_seen) — appends never rewrite history, which is
-what makes per-batch commits O(delta) instead of O(corpus).
+frontier, robots_cache, host_state) or APPEND (manifest carries the
+previous file list plus this snapshot's delta: crawl_order, documents,
+metrics, url_seen) — appends never rewrite history, which is what makes
+per-batch commits O(delta) instead of O(corpus).
 
 Schema evolution is Iceberg's field-id scheme on the shim: every commit
 records each table's current schema (stable integer field ids) and the

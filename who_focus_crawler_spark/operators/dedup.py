@@ -1,39 +1,24 @@
 """C4 — URL-seen membership + dedup (BASELINE.json north_star core).
 
-Exactness is mandatory ("exact crawl-order/URL-seen match"), so the
-partitioned bloom filter is only ever a NEGATIVE fast path (SURVEY.md §7
-hard-part #2): a bloom miss proves the URL is new and skips the join; a
-bloom hit is confirmed by the exact left-anti join against the url_seen
-table, scoped to the (few) bloom-positive rows. False positives cost a
-join probe; false negatives are impossible by construction, so no truly
-new URL is ever dropped.
+Exactness is mandatory ("exact crawl-order/URL-seen match"), so every
+seen-dedup form here is an exact anti-join on (url_hash, canon text): a
+64-bit hash collision cannot merge two distinct URLs, and no truly new
+URL is ever dropped. Two forms, same answer:
 
-Layout: url_seen and the filter blobs are partitioned by
-part_id = pmod(url_hash, P); candidates shuffle once on part_id and are
-checked partition-locally inside a cogrouped applyInPandas — membership
-math is pure numpy over uint64 (no per-row Python), double hashing
-h_i = h1 + i*h2 from the 64-bit xxhash64 signature.
+- `dedup_against_seen`: the shuffle anti-join, for candidate sets of
+  any size;
+- `dedup_against_seen_scanonly`: broadcasts the candidates' keys against
+  a map-side scan of url_seen, so url_seen is never shuffled; only for
+  a candidate set the caller has proven small.
+
+plans/crawl.py::crawl_wave picks between them from its proven admitted
+count. url_seen rows carry part_id = pmod(url_hash, P) (`part_id`).
 """
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-from who_focus_crawler_spark import schemas
-
-BLOOM_KIND = "bloom"
-CUCKOO_KIND = "cuckoo"  # operators/cuckoo.py — same negative-fast-path contract
-# A cuckoo overflow DROPS a resident fingerprint (kick-loop eviction), so an
-# overflowed table would answer "definitely new" for seen URLs — breaking the
-# mandated exactness. A partition whose filter overflowed is marked saturated:
-# every candidate in it takes the exact anti-join path until a full rebuild
-# (build_seen_filters over url_seen) restores a right-sized filter.
-SATURATED_KIND = "cuckoo_saturated"
-_MAX_CUCKOO_NBUCKETS = 1 << 26  # 64 Mi buckets × 4 slots × 2 B = 512 MiB blob
 
 
 def part_id(url_hash_col: Column, num_parts: int) -> Column:
@@ -62,275 +47,18 @@ def dedup_in_batch(events: DataFrame) -> DataFrame:
     ).select(*events.columns)
 
 
-# ------------------------------------------------------------ bloom math ---
-
-
-def _hash_positions(h: np.ndarray, nbits: int, nhashes: int):
-    """Yield nhashes bit positions per key (double hashing, power-of-2 nbits)."""
-    mask = np.uint64(nbits - 1)
-    h1 = h & mask
-    h2 = ((h >> np.uint64(33)) << np.uint64(1)) | np.uint64(1)
-    for i in range(nhashes):
-        yield (h1 + np.uint64(i) * h2) & mask
-
-
-def bloom_build(hashes: np.ndarray, nbits: int, nhashes: int) -> bytes:
-    bits = np.zeros(nbits // 8, dtype=np.uint8)
-    bloom_add(bits, hashes, nbits, nhashes)
-    return bits.tobytes()
-
-
-def bloom_add(bits: np.ndarray, hashes: np.ndarray, nbits: int, nhashes: int) -> None:
-    for idx in _hash_positions(hashes, nbits, nhashes):
-        np.bitwise_or.at(
-            bits, (idx >> np.uint64(3)).astype(np.int64), np.uint8(1) << (idx & np.uint64(7)).astype(np.uint8)
-        )
-
-
-def bloom_maybe_contains(
-    blob: bytes, hashes: np.ndarray, nbits: int, nhashes: int
-) -> np.ndarray:
-    bits = np.frombuffer(blob, dtype=np.uint8)
-    ok = np.ones(len(hashes), dtype=bool)
-    for idx in _hash_positions(hashes, nbits, nhashes):
-        ok &= (bits[(idx >> np.uint64(3)).astype(np.int64)] >> (idx & np.uint64(7)).astype(np.uint8)) & 1 == 1
-    return ok
-
-
-def _as_u64(s: pd.Series) -> np.ndarray:
-    return s.to_numpy(dtype=np.int64).astype(np.uint64)
-
-
-def _size_bits(n_keys: int, bits_per_key: int = 16) -> int:
-    nbits = 1024
-    while nbits < n_keys * bits_per_key:
-        nbits *= 2
-    return nbits
-
-
-# ------------------------------------------------------ filter maintenance ---
-
-
-def _cuckoo_nbuckets(capacity: int) -> int:
-    # 4 slots/bucket at <=50% load
-    n = 1024
-    while n * 4 // 2 < capacity:
-        n *= 2
-    return n
-
-
-def build_seen_filters(
-    url_seen: DataFrame, num_parts: int, capacity_per_part: int = 1 << 16,
-    nhashes: int = 7, kind: str = BLOOM_KIND,
-) -> DataFrame:
-    """Build per-partition membership blobs from scratch over url_seen.
-
-    kind="bloom": blob = bit array, meta = (nbits, nhashes).
-    kind="cuckoo": blob = fingerprint table, meta = (nbuckets, slots) in
-    the same (nbits, nhashes) columns."""
-    nbits = _size_bits(capacity_per_part)
-    nbuckets = _cuckoo_nbuckets(capacity_per_part)
-
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        pid = int(pdf["part_id"].iloc[0])
-        if kind == CUCKOO_KIND:
-            from who_focus_crawler_spark.operators.cuckoo import CuckooFilter
-
-            # full key set in hand ⇒ overflow is recoverable: rebuild at
-            # doubled nbuckets until it fits (or give up → saturated)
-            keys = _as_u64(pdf["url_hash"])
-            nb = max(nbuckets, _cuckoo_nbuckets(len(keys)))
-            while True:
-                f = CuckooFilter(nbuckets=nb, slots=4)
-                if f.insert(keys):
-                    return pd.DataFrame(
-                        {
-                            "part_id": [pid],
-                            "kind": [CUCKOO_KIND],
-                            "nbits": [nb],
-                            "nhashes": [4],
-                            "blob": [f.to_bytes()],
-                        }
-                    )
-                if nb >= _MAX_CUCKOO_NBUCKETS:
-                    return pd.DataFrame(
-                        {
-                            "part_id": [pid],
-                            "kind": [SATURATED_KIND],
-                            "nbits": [nb],
-                            "nhashes": [4],
-                            "blob": [b""],
-                        }
-                    )
-                nb *= 2
-        blob = bloom_build(_as_u64(pdf["url_hash"]), nbits, nhashes)
-        return pd.DataFrame(
-            {
-                "part_id": [pid],
-                "kind": [BLOOM_KIND],
-                "nbits": [nbits],
-                "nhashes": [nhashes],
-                "blob": [blob],
-            }
-        )
-
-    return url_seen.groupBy("part_id").applyInPandas(build, schemas.SEEN_FILTERS)
-
-
-def update_seen_filters(
-    seen_filters: DataFrame, new_urls: DataFrame, num_parts: int,
-    capacity_per_part: int = 1 << 16, nhashes: int = 7,
-    kind: str = BLOOM_KIND,
-) -> DataFrame:
-    """Incrementally OR the new URLs' bits into each partition's blob.
-
-    Cogrouped applyInPandas: the filter side has ≤1 row per part_id, the
-    new-URL side only the partitions touched this batch; untouched blobs
-    pass through unchanged. O(new URLs), never O(url_seen) (SURVEY.md §7
-    hard-part: the 10^10 frontier forbids rebuild-per-batch).
-    """
-    nbits_default = _size_bits(capacity_per_part)
-    nbuckets_default = _cuckoo_nbuckets(capacity_per_part)
-    adds = new_urls.select(
-        part_id(F.col("url_hash"), num_parts).alias("part_id"), "url_hash"
-    )
-
-    def upd(key, filt: pd.DataFrame, add: pd.DataFrame) -> pd.DataFrame:
-        pid = int(key[0])
-        k = filt["kind"].iloc[0] if len(filt) > 0 else kind
-        if k == SATURATED_KIND:
-            return filt.iloc[:1][
-                ["part_id", "kind", "nbits", "nhashes", "blob"]
-            ]  # stays saturated until a full rebuild from url_seen
-        if k == CUCKOO_KIND:
-            from who_focus_crawler_spark.operators.cuckoo import CuckooFilter
-
-            if len(filt) > 0:
-                nb, sl = int(filt["nbits"].iloc[0]), int(filt["nhashes"].iloc[0])
-                f = CuckooFilter.from_bytes(filt["blob"].iloc[0], nb, sl)
-            else:
-                nb, sl = nbuckets_default, 4
-                f = CuckooFilter(nbuckets=nb, slots=sl)
-            if len(add) > 0 and not f.insert(_as_u64(add["url_hash"])):
-                # overflow dropped a fingerprint: this table is no longer
-                # a sound negative path — demote the partition (incremental
-                # update has no key set to rebuild from)
-                return pd.DataFrame(
-                    {
-                        "part_id": [pid],
-                        "kind": [SATURATED_KIND],
-                        "nbits": [nb],
-                        "nhashes": [sl],
-                        "blob": [b""],
-                    }
-                )
-            return pd.DataFrame(
-                {
-                    "part_id": [pid],
-                    "kind": [CUCKOO_KIND],
-                    "nbits": [nb],
-                    "nhashes": [sl],
-                    "blob": [f.to_bytes()],
-                }
-            )
-        if len(filt) > 0:
-            nbits = int(filt["nbits"].iloc[0])
-            nh = int(filt["nhashes"].iloc[0])
-            bits = np.frombuffer(filt["blob"].iloc[0], dtype=np.uint8).copy()
-        else:
-            nbits, nh = nbits_default, nhashes
-            bits = np.zeros(nbits // 8, dtype=np.uint8)
-        if len(add) > 0:
-            bloom_add(bits, _as_u64(add["url_hash"]), nbits, nh)
-        return pd.DataFrame(
-            {
-                "part_id": [pid],
-                "kind": [BLOOM_KIND],
-                "nbits": [nbits],
-                "nhashes": [nh],
-                "blob": [bits.tobytes()],
-            }
-        )
-
-    return (
-        seen_filters.groupBy("part_id")
-        .cogroup(adds.groupBy("part_id"))
-        .applyInPandas(upd, schemas.SEEN_FILTERS)
-    )
-
-
 # ----------------------------------------------------------- the dedup op ---
 
 
-def mark_maybe_seen(
-    candidates: DataFrame, seen_filters: DataFrame, num_parts: int
-) -> DataFrame:
-    """Tier 1: attach ``maybe_seen`` via partition-local bloom probe."""
-    cand = candidates.withColumn("part_id", part_id(F.col("url_hash"), num_parts))
-    out_schema = T.StructType(
-        cand.schema.fields + [T.StructField("maybe_seen", T.BooleanType())]
-    )
-
-    def probe(key, cand_pdf: pd.DataFrame, filt: pd.DataFrame) -> pd.DataFrame:
-        if len(cand_pdf) == 0:
-            return cand_pdf.assign(maybe_seen=pd.Series([], dtype=bool))
-        if len(filt) == 0:
-            return cand_pdf.assign(maybe_seen=False)
-        if filt["kind"].iloc[0] == SATURATED_KIND:
-            # overflowed filter is unsound — force the exact anti-join
-            return cand_pdf.assign(maybe_seen=True)
-        if filt["kind"].iloc[0] == CUCKOO_KIND:
-            from who_focus_crawler_spark.operators.cuckoo import CuckooFilter
-
-            f = CuckooFilter.from_bytes(
-                filt["blob"].iloc[0],
-                int(filt["nbits"].iloc[0]),
-                int(filt["nhashes"].iloc[0]),
-            )
-            ok = f.maybe_contains(_as_u64(cand_pdf["url_hash"]))
-        else:
-            ok = bloom_maybe_contains(
-                filt["blob"].iloc[0],
-                _as_u64(cand_pdf["url_hash"]),
-                int(filt["nbits"].iloc[0]),
-                int(filt["nhashes"].iloc[0]),
-            )
-        return cand_pdf.assign(maybe_seen=ok)
-
-    return (
-        cand.groupBy("part_id")
-        .cogroup(seen_filters.groupBy("part_id"))
-        .applyInPandas(probe, out_schema)
-    )
-
-
-def dedup_against_seen(
-    candidates: DataFrame,
-    url_seen: DataFrame,
-    seen_filters: DataFrame | None = None,
-    num_parts: int = 32,
-) -> DataFrame:
-    """Rows of ``candidates`` (unique target_url) that are truly new.
-
-    With filters: bloom-negative rows pass immediately; bloom-positive rows
-    are confirmed by the exact anti-join (collision-proof: the join key is
-    (url_hash, canon text), so even a 64-bit hash collision cannot merge
-    two distinct URLs). Without filters: plain exact anti-join.
-    """
+def dedup_against_seen(candidates: DataFrame, url_seen: DataFrame) -> DataFrame:
+    """Rows of ``candidates`` (unique target_url) that are truly new:
+    the exact shuffle anti-join against url_seen on (url_hash, canon
+    text)."""
     key = ["url_hash", "target_url"]
     seen = url_seen.select(
         F.col("url_hash"), F.col("canon_url").alias("target_url")
     )
-    if seen_filters is None:
-        return candidates.join(seen, key, "left_anti")
-    marked = mark_maybe_seen(candidates, seen_filters, num_parts)
-    definitely_new = marked.filter(~F.col("maybe_seen")).drop("maybe_seen", "part_id")
-    confirmed_new = (
-        marked.filter(F.col("maybe_seen"))
-        .drop("maybe_seen", "part_id")
-        .join(seen, key, "left_anti")
-    )
-    return definitely_new.unionByName(confirmed_new)
+    return candidates.join(seen, key, "left_anti")
 
 
 def dedup_against_seen_scanonly(

@@ -1,8 +1,8 @@
 """Frontier operators: bootstrap, candidate selection (C6), merge (C5).
 
 The frontier is hash-partitioned by host_bucket = pmod(xxhash64(host), P)
-so selection windows, politeness state, and seen-filters are all
-partition-local after one shuffle (SURVEY.md §4 physical layout).
+so selection windows and politeness state are partition-local after
+one shuffle (SURVEY.md §4 physical layout).
 """
 
 from __future__ import annotations

@@ -15,16 +15,15 @@ snapshot:
 The two drivers keep only what differs between them. The batch loop
 (`run_batch`: one driver-side iteration = one fetch batch = one
 committed snapshot) adds C6 selection in front of the wave (OPIC and
-aging views, `select_candidates`) and C5 merge, the seen-filter update,
-C16 metrics and the C14 commit behind it. The streaming loop
-(streaming/crawl.py) feeds the wave arrivals ∪ its backlog and
-publishes the wave's new links to its inbox.
+aging views, `select_candidates`) and C5 merge, C16 metrics and the
+C14 commit behind it. The streaming loop (streaming/crawl.py) feeds the
+wave arrivals ∪ its backlog and publishes the wave's new links to its
+inbox.
 
-Seen-dedup path, chosen from what the driver can already observe: a
-loop that keeps seen filters (the batch loop with ``use_bloom``) probes
-them in front of the exact anti-join; otherwise a wave whose PROVEN
-admitted count is at most `SCANONLY_MAX_FETCHED` takes the scan-only
-form (no shuffle of url_seen); larger waves take the shuffle anti-join.
+Seen-dedup path, chosen from the count the wave already proves: a wave
+whose admitted count is at most `SCANONLY_MAX_FETCHED` takes the
+scan-only form (no shuffle of url_seen); larger waves take the shuffle
+anti-join. Both are exact (operators/dedup.py).
 
 Determinism contract: given the same seed list, politeness budget, and
 fixture web, `crawl_order`, `url_seen`, and every span sequence are
@@ -43,12 +42,10 @@ from who_focus_crawler_spark import schemas
 from who_focus_crawler_spark.checkpoint.snapshot import SnapshotCatalog
 from who_focus_crawler_spark.functions.traps import trap_score
 from who_focus_crawler_spark.operators.dedup import (
-    build_seen_filters,
     dedup_against_seen,
     dedup_against_seen_scanonly,
     dedup_in_batch,
     part_id,
-    update_seen_filters,
 )
 from who_focus_crawler_spark.operators.discover import (
     discover_links,
@@ -77,8 +74,6 @@ class CrawlConfig:
     web: WebConfig
     checkpoint_dir: str
     num_buckets: int = 32
-    use_bloom: bool = True
-    filter_kind: str = "bloom"  # or "cuckoo" (operators/cuckoo.py)
     salt: int = 16  # C17: sub-partitions per host in the selection window
     max_batches: int | None = None  # default: web.max_batches
     # Frontier hygiene: drop discovered links whose structural trap
@@ -206,13 +201,11 @@ def bootstrap(spark: SparkSession, cfg: CrawlConfig) -> SnapshotCatalog:
     if cfg.use_sitemaps:
         frontier = _add_sitemap_seeds(frontier, cfg)
     url_seen = seen_rows(frontier, "canon_url", cfg.num_buckets)
-    filters = build_seen_filters(url_seen, cfg.num_buckets, kind=cfg.filter_kind)
     catalog.commit(
         0,
         {
             "frontier": frontier,
             "url_seen": url_seen,
-            "seen_filters": filters,
             "robots_cache": None,
             "host_state": _empty(spark, schemas.HOST_STATE),
             "crawl_order": _empty(spark, schemas.CRAWL_ORDER),
@@ -385,7 +378,6 @@ def crawl_wave(
     host_state: DataFrame | None,
     clock: int,
     base_seq: int,
-    seen_filters: DataFrame | None = None,
     content_seen: DataFrame | None = None,
 ) -> Wave:
     """One crawl wave over a driver's candidate ``rows`` (frontier
@@ -393,7 +385,7 @@ def crawl_wave(
     C4 (module docstring). ``clock`` is the batch (or epoch) number: the
     robots TTL clock and the ``batch`` column of the deltas; seq
     continues from ``base_seq``. ``robots_cache`` None means nothing is
-    cached yet; ``seen_filters`` is given only by a loop that keeps them.
+    cached yet.
 
     Spark actions: one count per gate pass, plus the robots refresh
     when the cache misses a host or is absent. Everything after C7 is
@@ -486,14 +478,12 @@ def crawl_wave(
             trap_score(F.col("target_url")) < F.lit(cfg.trap_threshold)
         )
     winners = dedup_in_batch(links)
-    if seen_filters is not None:
-        new_unique = dedup_against_seen(winners, url_seen, seen_filters, P)
-    elif n_admitted <= SCANONLY_MAX_FETCHED:
+    if n_admitted <= SCANONLY_MAX_FETCHED:
         # winners cached: the scan-only form traverses it twice (its
         # keys are broadcast, then it is the probe side)
         new_unique = dedup_against_seen_scanonly(keep(winners), url_seen)
     else:
-        new_unique = dedup_against_seen(winners, url_seen, None, P)
+        new_unique = dedup_against_seen(winners, url_seen)
 
     wave = Wave(
         cand=cand,
@@ -537,7 +527,7 @@ def run_batch(
     spark: SparkSession, cfg: CrawlConfig, catalog: SnapshotCatalog
 ) -> dict:
     """Execute one fetch batch and commit it: C6 select, one crawl wave,
-    C5 merge, seen-filter update, C16 metrics. Returns the batch stats."""
+    C5 merge, C16 metrics. Returns the batch stats."""
     st = catalog.state()
     assert st is not None and not st["finished"]
     batch, base_seq = st["next_batch"], st["next_seq"]
@@ -547,14 +537,12 @@ def run_batch(
     # creates snapshots of its own, and published ids are immutable —
     # a resumed crawl must commit past them.
     sid = catalog.next_snapshot_id()
-    P = cfg.num_buckets
 
     def read(name: str, schema) -> DataFrame | None:
         return catalog.read_table(spark, name, schema)
 
     frontier = read("frontier", schemas.FRONTIER)
     url_seen = read("url_seen", schemas.URL_SEEN)
-    seen_filters = read("seen_filters", schemas.SEEN_FILTERS) if cfg.use_bloom else None
 
     # C6 — select once (small: ≤ hosts × k rows), then one wave decides
     frontier_sel = (
@@ -577,7 +565,6 @@ def run_batch(
         read("host_state", schemas.HOST_STATE),
         batch,
         base_seq,
-        seen_filters=seen_filters,
         content_seen=(
             read("content_seen", schemas.CONTENT_SEEN)
             if cfg.web.content_dedup
@@ -603,11 +590,6 @@ def run_batch(
         F.lit("enqueued").alias("state"),
     )
     frontier2 = merge_frontier(frontier, consumed, new_frontier_rows)
-    filters2 = (
-        update_seen_filters(seen_filters, w.url_seen, P, kind=cfg.filter_kind)
-        if seen_filters is not None and w.url_seen is not None
-        else None
-    )
 
     # C16 — metrics (per batch × host; deduped = discovered − new_urls)
     sched = w.cand.groupBy("host").agg(
@@ -645,7 +627,6 @@ def run_batch(
         {
             "frontier": frontier2,
             "url_seen": w.url_seen,  # append tables: deltas only
-            "seen_filters": filters2,
             "robots_cache": w.robots_cache,
             "host_state": w.host_state,
             "crawl_order": w.crawl_order,

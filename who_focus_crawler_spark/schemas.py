@@ -112,16 +112,6 @@ CONTENT_SEEN = T.StructType(
     ]
 )
 
-SEEN_FILTERS = T.StructType(
-    [
-        T.StructField("part_id", T.IntegerType(), False),
-        T.StructField("kind", T.StringType(), False),
-        T.StructField("nbits", T.LongType(), False),
-        T.StructField("nhashes", T.IntegerType(), False),
-        T.StructField("blob", T.BinaryType(), False),
-    ]
-)
-
 # streaming ingestion deltas (streaming/pipeline.py::stream_frontier_to_catalog)
 FRONTIER_INGEST = T.StructType(
     [

@@ -12,8 +12,8 @@ import os
 from pyspark.sql import SparkSession
 
 # Number of hash buckets for frontier / url_seen partitioning
-# (pmod(xxhash64(host|url), P)). Pinned explicitly because per-partition
-# seen-filters and golden determinism depend on it (SURVEY.md §4).
+# (pmod(xxhash64(host|url), P)). Pinned explicitly because golden
+# determinism depends on it (SURVEY.md §4).
 DEFAULT_BUCKETS = int(os.environ.get("WFC_BUCKETS", "32"))
 
 
